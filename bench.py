@@ -82,13 +82,16 @@ def main() -> None:
 
         register_feed_source(spark)
         fd, tiny_feed = tempfile.mkstemp(suffix=".jsonl", prefix="feed_warm_")
-        with os.fdopen(fd, "w") as fh:
-            fh.write(
-                '{"doc_id": 0, "text": "w", "lang": "en",'
-                ' "source": "warm", "n_chars": 1}\n'
-            )
-        spark.read.format("document_feed").option("path", tiny_feed).load(
-        ).groupBy("source").count().collect()
+        try:
+            with os.fdopen(fd, "w") as fh:
+                fh.write(
+                    '{"doc_id": 0, "text": "w", "lang": "en",'
+                    ' "source": "warm", "n_chars": 1}\n'
+                )
+            spark.read.format("document_feed").option("path", tiny_feed).load(
+            ).groupBy("source").count().collect()
+        finally:
+            os.unlink(tiny_feed)
     except Exception:
         pass  # warmup is best-effort; timings just run colder
 

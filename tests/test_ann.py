@@ -230,6 +230,98 @@ def test_written_ivf_index_partition_pruning(emb, tmp_path):
     )
 
 
+def _result(df):
+    return [(r["vec_id"], round(r["dist"], 6)) for r in df.collect()]
+
+
+def test_indexed_search_reads_only_probed_lists(emb, tmp_path):
+    """Past Spark's 32-path parallel-listing threshold, a repeat query
+    against a written artifact runs exactly one Spark job (the top-k
+    scan: centroids and schema are reused, no list is listed by a
+    distributed job) and its scan reads only files of the probed
+    lists."""
+    from inmem_vector_db_spark.operators.ann import (
+        ivf_search_indexed,
+        probe_lists,
+        write_ivf_index,
+    )
+
+    spark = emb.sparkSession
+    sc = spark.sparkContext
+    path = str(tmp_path / "idx")
+    centroids = select_centroids(emb, stride=10)
+    assert len(centroids[0]) > 32
+    write_ivf_index(emb, path, centroids=centroids)
+    q = [float(x) for x in emb.filter("vec_id = 1").head()["embedding"]]
+    ivf_search_indexed(spark, path, q, k=10, nprobe=3).collect()
+
+    sc.setJobGroup("ivf_repeat_query", "repeat IVF query", False)
+    try:
+        got = ivf_search_indexed(spark, path, q, k=10, nprobe=3)
+        rows = _result(got)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup("ivf_repeat_query")) == 1
+
+    probed = {f"cluster_id={c}" for c in probe_lists(*centroids, q, 3)}
+    files = got.inputFiles()
+    assert files and all(f.split("/")[-2] in probed for f in files)
+    assert rows == _result(ivf_search(emb, q, k=10, nprobe=3, centroids=centroids))
+
+
+def test_indexed_search_sees_in_place_overwrite(emb, tmp_path):
+    """Rewriting an artifact in place with different centroids must not
+    serve the first version's cached centroids."""
+    from inmem_vector_db_spark.operators.ann import (
+        ivf_search_indexed,
+        write_ivf_index,
+    )
+
+    spark = emb.sparkSession
+    path = str(tmp_path / "idx")
+    q = [float(x) for x in emb.filter("vec_id = 1").head()["embedding"]]
+    write_ivf_index(emb, path, stride=50)
+    ivf_search_indexed(spark, path, q, k=10, nprobe=2).collect()
+
+    write_ivf_index(emb, path, stride=30)
+    got = _result(ivf_search_indexed(spark, path, q, k=10, nprobe=2))
+    assert got == _result(ivf_search(emb, q, k=10, nprobe=2, stride=30))
+    assert got != _result(ivf_search(emb, q, k=10, nprobe=2, stride=50))
+
+
+def test_indexed_search_with_emptied_lists(emb, tmp_path):
+    """A probed list that deletes emptied (its directory is gone) is
+    skipped, the rest are searched as before; a probe whose lists are
+    all gone returns no rows instead of raising."""
+    from inmem_vector_db_spark.operators.ann import (
+        delete_from_ivf_index,
+        ivf_search_indexed,
+        probe_lists,
+        write_ivf_index,
+    )
+
+    spark = emb.sparkSession
+    path = str(tmp_path / "idx")
+    centroids = select_centroids(emb, stride=50)
+    write_ivf_index(emb, path, centroids=centroids)
+    q = [float(x) for x in emb.filter("vec_id = 1").head()["embedding"]]
+    probe = probe_lists(*centroids, q, 3)
+    ivf_search_indexed(spark, path, q, k=10, nprobe=3).collect()
+    lists = ivf_assign(emb, *centroids).select("vec_id", "cluster_id").collect()
+
+    def ids_in(cids):
+        return [r["vec_id"] for r in lists if r["cluster_id"] in cids]
+
+    gone = ids_in(probe[:1])
+    assert delete_from_ivf_index(spark, path, gone) == 1
+    survivors = emb.filter(~F.col("vec_id").isin(gone))
+    want = ivf_search(survivors, q, k=10, nprobe=3, centroids=centroids)
+    assert _result(ivf_search_indexed(spark, path, q, k=10, nprobe=3)) == _result(want)
+
+    assert delete_from_ivf_index(spark, path, ids_in(probe[1:])) == 2
+    assert ivf_search_indexed(spark, path, q, k=10, nprobe=3).collect() == []
+
+
 def test_ivf_assign_keep_cols_carries_attributes(emb):
     cids, cmat = select_centroids(emb, stride=50)
     a = ivf_assign(emb, cids, cmat, keep_cols=("label",))
