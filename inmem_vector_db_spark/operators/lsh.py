@@ -22,12 +22,15 @@ Spark-first design:
   this is a written table partitioned by ``(table_idx, sig)`` — the
   "index build job" (reference M10) — so candidate retrieval is a
   partition-pruned scan, not a full shuffle.
-* **Search** = equi-join of the (broadcast) query signatures against the
-  index on ``(table_idx, sig)`` — the shuffle moves only ids and 8-char
-  signatures, never vectors — then a semi-join pulls candidate vectors,
-  exact distances re-rank, window top-k.
-* **Fallback** is per-query: only queries with < k candidates pay the
-  exact scan, via ``knn_join_vectorized`` (partition-local top-k).
+* **Search** = one candidate job, then one re-rank plan.  The index
+  joins the broadcast query-signature literal on ``(table_idx, sig)``
+  and only ``(query_id, id)`` pairs reach the driver, which unions
+  them across tables.  The corpus then joins the broadcast pair and
+  query-vector literals, exact distances re-rank, window top-k.  No
+  broadcast ever holds corpus vectors.
+* **Fallback** is per-query and decided from the collected candidate
+  counts: only queries with < k distinct candidates pay the exact
+  scan, via ``knn_join_vectorized`` (partition-local top-k).
 """
 
 from __future__ import annotations
@@ -63,6 +66,18 @@ def md5_planes(n_planes: int, dim: int) -> np.ndarray:
             )
             out[j, d] = (h % 2001 - 1000) / 1000.0
     return out
+
+
+def _signatures(mat: np.ndarray, planes: np.ndarray, k: int) -> np.ndarray:
+    """Sign-bit signatures of the rows of ``mat`` (N, dim) against
+    ``planes`` (L*k, dim), flat and row-major: (N*L,) strings of k
+    '0'/'1' chars.  Rows are L2-normalized first (``lsh.py:340``); the
+    contiguous (N*L, k) char matrix viewed as ``U{k}`` packs every
+    string without a per-row Python join."""
+    norms = np.linalg.norm(mat, axis=1, keepdims=True)
+    norms[norms == 0.0] = 1.0
+    chars = np.where(((mat / norms) @ planes.T) >= 0.0, "1", "0")
+    return np.ascontiguousarray(chars.reshape(-1, k)).view(f"U{k}").ravel()
 
 
 class RandomHyperplaneLSH:
@@ -101,17 +116,11 @@ class RandomHyperplaneLSH:
 
     def signatures_np(self, mat: np.ndarray) -> list[list[str]]:
         """All L signatures per row of ``mat`` (N, dim) — one matmul."""
-        norms = np.linalg.norm(mat, axis=1, keepdims=True)
-        norms[norms == 0.0] = 1.0
-        normed = mat / norms  # lsh.py:340 normalizes before hashing
-        bits = (normed @ self._planes.T) >= 0.0  # (N, L*k)
-        L, k = self.num_tables, self.hash_size
-        out: list[list[str]] = []
-        for row in bits:
-            out.append(
-                ["".join("1" if b else "0" for b in row[t * k : (t + 1) * k]) for t in range(L)]
-            )
-        return out
+        return (
+            _signatures(mat, self._planes, self.hash_size)
+            .reshape(len(mat), self.num_tables)
+            .tolist()
+        )
 
     def with_signatures(
         self, df: DataFrame, vec_col: str = "embedding", sig_col: str = "sigs"
@@ -121,9 +130,8 @@ class RandomHyperplaneLSH:
         ``mapInArrow``: the (N, dim) matrix reshapes from the ListArray
         flat buffer, every input column re-emits its Arrow array
         untouched (the old pandas path copied the whole batch per
-        yield), and the k-bit signature strings pack VECTORIZED — the
-        contiguous (N*L, k) '0'/'1' char matrix viewed as U{k} is
-        exactly the per-row ``"".join`` without the Python loop."""
+        yield), and the signatures come from ``_signatures``, the same
+        packer ``signatures_np`` uses."""
         planes = self._planes
         L, k = self.num_tables, self.hash_size
         dim = planes.shape[1]
@@ -135,16 +143,8 @@ class RandomHyperplaneLSH:
                 if n == 0:
                     continue
                 names = rb.schema.names
-                mat = flat_matrix(rb, vec_col, expected_dim=dim)
-                norms = np.linalg.norm(mat, axis=1, keepdims=True)
-                norms[norms == 0.0] = 1.0
-                bits = ((mat / norms) @ planes.T) >= 0.0
-                # bits -> '0'/'1' chars -> one U{k} string per table
-                chars = np.where(bits, "1", "0")
-                sig_flat = (
-                    np.ascontiguousarray(chars.reshape(n * L, k))
-                    .view(f"U{k}")
-                    .ravel()
+                sig_flat = _signatures(
+                    flat_matrix(rb, vec_col, expected_dim=dim), planes, k
                 )
                 sig_offsets = pa.array(
                     np.arange(0, (n + 1) * L, L, dtype=np.int32)
@@ -199,6 +199,19 @@ class RandomHyperplaneLSH:
     ) -> DataFrame:
         """Approximate top-k with the reference's exact-scan fallback.
 
+        One Spark job finds the candidates: the index joins the
+        broadcast query-signature literal on ``(table_idx, sig)`` and
+        the ``(query_id, id)`` pairs are collected and de-duplicated on
+        the driver.  Per query that is at most the summed size of its
+        probed buckets (L of them, ``L * (1 + hash_size)`` with
+        multi-probe) — the bound LSH exists to keep small.  The exact
+        candidate counts decide the fallback: a query with ``>= k``
+        distinct candidates is re-ranked, the rest take the exact scan
+        (``knn_join_vectorized``, reference ``lsh.py:199-202``).  The
+        re-rank is one plan: the corpus joins the broadcast pair and
+        query-vector literals, so only ids and query vectors are ever
+        broadcast, and a window keeps the top k per query.
+
         ``probe_radius=1`` enables multi-probe: each query also probes
         every bucket whose signature differs by one bit — the
         recall-vs-tables trade the reference sketched but never wired in
@@ -217,6 +230,10 @@ class RandomHyperplaneLSH:
             raise ValueError("probe_radius supports 0 (off) or 1 (bit flips)")
         if k <= 0:
             raise ValueError("k must be > 0")
+        from pyspark.sql.types import IntegerType, StringType, StructType
+
+        from inmem_vector_db_spark.functions.localframe import literal_df
+
         spark = corpus.sparkSession
         if index is None:
             index = self.build_index(corpus, id_col, vec_col)
@@ -226,10 +243,9 @@ class RandomHyperplaneLSH:
             raise ValueError("queries is empty")
         qids = [r[0] for r in qrows]
         qmat = np.asarray([list(r[1]) for r in qrows], dtype=np.float64)
-        qsigs = self.signatures_np(qmat)
         qsig_rows = [
             (qid, t, sig)
-            for qid, sigs in zip(qids, qsigs)
+            for qid, sigs in zip(qids, self.signatures_np(qmat))
             for t, sig in enumerate(sigs)
         ]
         if probe_radius == 1:
@@ -238,43 +254,39 @@ class RandomHyperplaneLSH:
                 for qid, t, sig in list(qsig_rows)
                 for i in range(len(sig))
             ]
-        qschema = (
-            f"{query_id_col} {queries.schema[query_id_col].dataType.simpleString()}, "
-            "table_idx int, sig string"
+        qid_field = queries.schema[query_id_col]
+        qsig_df = literal_df(
+            spark,
+            qsig_rows,
+            StructType([qid_field])
+            .add("table_idx", IntegerType())
+            .add("sig", StringType()),
         )
-        from inmem_vector_db_spark.functions.localframe import literal_df
 
-        # literal_df, not createDataFrame: the query-signature table is a
-        # bounded driver-side literal set, and the parallelize-backed
-        # frame paid a Python-worker evaluation on every search (r13)
-        qsig_df = literal_df(spark, qsig_rows, qschema)
-
-        # candidate ids: equi-join on (table_idx, sig), union across
-        # tables via distinct — only (id, qid) pairs move.
-        # localCheckpoint: both the fallback-count branch and the final
-        # re-rank consume it, and without materialization each would
-        # re-run the signature build (the expensive mapInArrow over the
-        # corpus) from scratch.  Unlike persist(), checkpoint blocks are
-        # released when the DataFrame is garbage-collected, so repeated
-        # searches in a long-lived session don't accumulate cached
-        # partitions.  (On a cluster this is a written signature table —
-        # the reference's index artifact, M10 — not a cache at all.)
-        cand = (
+        # the one candidate job: union across tables is a driver-side set
+        cands: dict = {qid: set() for qid in qids}
+        for qid, cid in (
             index.join(F.broadcast(qsig_df), ["table_idx", "sig"])
             .select(query_id_col, id_col)
-            .distinct()
-            .localCheckpoint(eager=False)
-        )
+            .collect()
+        ):
+            cands[qid].add(cid)
+        short = {q for q, c in cands.items() if len(c) < k} if exact_fallback else set()
+        pairs = [(q, c) for q, cs in cands.items() if q not in short for c in cs]
 
-        # exact re-rank of candidates under the requested metric
-        qvec_df = F.broadcast(
-            queries.select(
-                F.col(query_id_col), F.col(query_vec_col).alias("__qvec")
-            )
+        pair_df = literal_df(
+            spark, pairs, StructType([qid_field, corpus.schema[id_col]])
+        )
+        qvec_df = literal_df(
+            spark, qrows, StructType([qid_field, queries.schema[query_vec_col]])
         )
         scored = (
-            cand.join(corpus.select(id_col, vec_col), id_col)
-            .join(qvec_df, query_id_col)
+            corpus.select(id_col, vec_col)
+            .join(F.broadcast(pair_df), id_col)
+            .join(
+                F.broadcast(qvec_df.withColumnRenamed(query_vec_col, "__qvec")),
+                query_id_col,
+            )
             .select(
                 query_id_col,
                 id_col,
@@ -285,33 +297,14 @@ class RandomHyperplaneLSH:
         approx = scored.withColumn("rank", F.row_number().over(w)).filter(
             F.col("rank") <= k
         )
-
-        if not exact_fallback:
-            return approx
-
-        # reference lsh.py:199-202: queries with < k candidates fall back
-        # to the exact scan.  The full/short split is computed
-        # DISTRIBUTIVELY (groupBy-count + semi/anti joins on query_id) —
-        # no per-query driver dict — so the split scales past thousands
-        # of queries.  Only the short queries themselves are collected,
-        # inside knn_join_vectorized, which broadcasts its query matrix
-        # by design.
-        full = F.broadcast(
-            cand.groupBy(query_id_col)
-            .agg(F.count(F.lit(1)).alias("__n"))
-            .filter(F.col("__n") >= k)
-            .select(query_id_col)
-        )
-        short_queries = queries.join(full, query_id_col, "left_anti")
-        if short_queries.isEmpty():
+        if not short:
             return approx
         exact = knn_join_vectorized(
-            corpus, short_queries, k=k, metric=metric,
-            id_col=id_col, vec_col=vec_col,
+            corpus, qvec_df.filter(F.col(query_id_col).isin(list(short))),
+            k=k, metric=metric, id_col=id_col, vec_col=vec_col,
             query_id_col=query_id_col, query_vec_col=query_vec_col,
         )
-        kept = approx.join(full, query_id_col, "left_semi")
-        return kept.unionByName(exact)
+        return approx.unionByName(exact)
 
 
 def write_lsh_index(

@@ -149,14 +149,24 @@ def test_md5_plane_scheme_portable_and_recall(emb, queries):
 
 def test_distributed_fallback_split_matches_per_query(emb):
     """Mixed batch: some queries with rich buckets, some with starved
-    buckets — the distributed full/short split must give every query
-    exactly k rows with the starved ones exactly equal to the exact
-    scan (fallback is computed via anti-join, not a driver dict)."""
-    lsh = RandomHyperplaneLSH(dim=64, num_tables=1, hash_size=12, seed=3)
+    buckets (6-bit single table: bucket sizes 6-12 around k=7) — every
+    query gets exactly k rows; a starved query (< k candidates, counted
+    here from ``signatures_np``) equals the exact scan id-for-id, and a
+    full query's ids all come from its own bucket."""
+    lsh = RandomHyperplaneLSH(dim=64, num_tables=1, hash_size=6, seed=3)
     queries = (
         emb.filter(F.col("vec_id") < 6)
         .select(F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec"))
     )
+    rows = emb.select("vec_id", "embedding").collect()
+    sigs = lsh.signatures_np(np.array([r["embedding"] for r in rows], dtype=np.float64))
+    sig_of = {r["vec_id"]: s for r, s in zip(rows, sigs)}
+    bucket = {
+        q: {i for i, s in sig_of.items() if s == sig_of[q]} for q in range(6)
+    }
+    starved = {q for q, c in bucket.items() if len(c) < 7}
+    assert starved and len(starved) < 6  # the batch really is mixed
+
     res = lsh.search(emb, queries, k=7, metric="euclidean").collect()
     by_q = {}
     for r in res:
@@ -165,11 +175,13 @@ def test_distributed_fallback_split_matches_per_query(emb):
     exact_by_q = {}
     for r in exact:
         exact_by_q.setdefault(r["query_id"], set()).add(r["vec_id"])
-    assert set(by_q) == set(exact_by_q)
+    assert set(by_q) == set(exact_by_q) == set(range(6))
     for qid, ids in by_q.items():
         assert len(ids) == 7
-        # approx results are a subset of the corpus; fallback queries
-        # must match the exact scan id-for-id
+        if qid in starved:
+            assert ids == exact_by_q[qid]
+        else:
+            assert ids <= bucket[qid]
 
 
 def test_multiprobe_recall_monotone_and_candidates_superset(emb, queries):

@@ -130,20 +130,52 @@ def test_top_values_per_key_profile(spark, sf_dir):
     assert fracs == sorted(fracs, reverse=True)
 
 
-def test_lsh_search_broadcasts_signatures_not_vectors(spark, sf_dir):
-    """LSH candidate retrieval must broadcast the tiny query-signature
-    table; the corpus embedding column must not appear in the join that
-    produces candidates (only ids + signatures shuffle)."""
-    from inmem_vector_db_spark.operators.lsh import RandomHyperplaneLSH
+def test_lsh_search_broadcasts_signatures_not_vectors(spark, sf_dir, tmp_path):
+    """LSH search broadcasts only driver literals — the query
+    signatures, the candidate (query_id, id) pairs and the query
+    vectors — so the corpus embedding column never sits in a broadcast
+    side; the corpus is the streamed side of the re-rank join.  A
+    repeat single-query search against a written index costs one
+    candidate job plus the re-rank plan's jobs."""
+    from inmem_vector_db_spark.functions.localframe import literal_df
+    from inmem_vector_db_spark.operators.lsh import (
+        RandomHyperplaneLSH,
+        read_lsh_index,
+        write_lsh_index,
+    )
 
     spark.catalog.clearCache()
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    lsh = RandomHyperplaneLSH(dim=64, num_tables=4, hash_size=4)
+    path = str(tmp_path / "lsh_idx")
+    write_lsh_index(lsh, emb, path)
+    index = read_lsh_index(spark, path)
     queries = emb.limit(2).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
     )
-    lsh = RandomHyperplaneLSH(dim=64, num_tables=4, hash_size=4)
-    plan = _plan(lsh.search(emb, queries, k=3, metric="cosine", exact_fallback=False))
-    assert "BroadcastExchange" in plan or "BroadcastHashJoin" in plan
+    res = lsh.search(emb, queries, k=3, metric="cosine", index=index)
+    res.collect()
+    lines = _plan(res).splitlines()
+    children = [
+        lines[i + 1].split("+- ", 1)[1].split()
+        for i, ln in enumerate(lines)
+        if "BroadcastExchange" in ln
+    ]
+    assert children
+    for child in children:
+        name = child[1] if child[0].startswith("*(") else child[0]
+        assert name == "LocalTableScan", child
+
+    vec = [float(x) for x in emb.head()["embedding"]]
+    query = literal_df(spark, [(0, vec)], "query_id bigint, query_vec array<double>")
+    sc = spark.sparkContext
+    lsh.search(emb, query, k=3, index=index).collect()
+    sc.setJobGroup("lsh_repeat", "repeat single-query LSH search", False)
+    try:
+        lsh.search(emb, query, k=3, index=index).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup("lsh_repeat")) <= 6
 
 
 def test_partitioned_snapshot_prunes(spark, tmp_path):

@@ -45,9 +45,9 @@ HEADLINERS = {
     "embedding_near_dup": "distributed block-pair GEMM: explode to unordered "
     "block pairs, one Exchange on (bi,bj), numpy GEMM per pair task — no "
     "driver collect, no full-corpus broadcast anywhere in the plan.",
-    "lsh_knn_cosine": "signature index equi-join moves only (id, sig) pairs; "
-    "exact re-rank touches candidate vectors only; fallback split is a "
-    "broadcast semi/anti join, not a driver loop.",
+    "lsh_knn_cosine": "one candidate job collects (query_id, id) pairs from "
+    "the signature equi-join; the re-rank streams the corpus past broadcast "
+    "pair and query-vector literals — no broadcast holds corpus vectors.",
     "q5_region_revenue": "dims broadcast (BroadcastHashJoin); the only "
     "shuffle is the final group-by aggregation.",
     "q6_forecast_revenue": "all three predicates pushed to the scan; "
